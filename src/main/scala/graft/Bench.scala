@@ -64,8 +64,12 @@ object Bench {
     // session-scoped memo MAPS reset too: a purged harness re-running the
     // same query must be a fresh session, not a memo HIT — the deferred
     // gram memo persists on its first hit, so leaving the map warm makes
-    // the timed pass pay the cache build its purge just threw away
+    // the timed pass pay the cache build its purge just threw away, and a
+    // warm centroid/PQ memo would keep IVF/PQ training out of the timing
     graft.ops.TextAnalysis.clearGramCache()
+    graft.queries.VectorQueries.clearWalkCache()
+    graft.ops.Similarity.clearCentroidCache()
+    graft.ops.Similarity.clearPqCache()
   }
 
   /** Materialize the FULL result (all columns through the final projection)

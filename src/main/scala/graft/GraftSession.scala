@@ -38,7 +38,7 @@ object GraftSession {
       .map { kv =>
         val i = kv.indexOf('=')
         (kv.take(i).trim, kv.drop(i + 1).trim)
-      }
+      }.filter(_._1.nonEmpty)
     val (rejected, applied) = pairs.partition(p => ProtectedConfs(p._1))
     (applied, rejected)
   }

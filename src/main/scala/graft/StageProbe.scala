@@ -56,7 +56,7 @@ object StageProbe {
     names.foreach { name =>
       purge(); run(name) // warmup
       purge()
-      rows.clear()
+      rows.synchronized(rows.clear())
       collecting = true
       val cg = org.apache.spark.metrics.source.CodegenMetrics
       val gc0 = gcMs(); val cgt0 = cg.METRIC_COMPILATION_TIME.getCount
@@ -72,12 +72,14 @@ object StageProbe {
       val dcgt = cg.METRIC_COMPILATION_TIME.getCount - cgt0
       val dcgn = cg.METRIC_SOURCE_CODE_SIZE.getCount - cgn0
       collecting = false
-      // give the listener bus a moment to drain
+      // give the listener bus a moment to drain, then read a snapshot
+      // taken under the lock (a late stage event may still append)
       Thread.sleep(500)
-      val sorted = rows.sortBy(-_.runMs)
+      val got = rows.synchronized(rows.toVector)
+      val sorted = got.sortBy(-_.runMs)
       println(f"%nSTAGEPROBE $name  wall=$wall%.2f s  proc-cpu=$dcpu%.2f s  " +
-        f"stages=${rows.length}  sum-stage-run=${rows.map(_.runMs).sum / 1e3}%.2f s  " +
-        f"sum-stage-cpu=${rows.map(_.cpuNs).sum / 1e9}%.2f s  " +
+        f"stages=${got.length}  sum-stage-run=${got.map(_.runMs).sum / 1e3}%.2f s  " +
+        f"sum-stage-cpu=${got.map(_.cpuNs).sum / 1e9}%.2f s  " +
         f"gc=$dgc%.2f s  janino-compiles=$dcgn (histo-count=$dcgt)  " +
         f"jit=${(java.lang.management.ManagementFactory.getCompilationMXBean
           .getTotalCompilationTime - jit0) / 1e3}%.2f s")

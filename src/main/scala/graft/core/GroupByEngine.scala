@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +48,7 @@ object GroupByEngine {
       combine: CombineMode = CombineMode.Merged): Option[DataFrame] = {
     val existing = pruneMissing(spark, filenames)
     if (existing.isEmpty) None
-    else Some(groupbyDf(SchemaDrift.readSharded(spark, existing), keys, aggs, where, aggregate, combine))
+    else Some(groupbyDf(SchemaDrift.readListed(spark, existing), keys, aggs, where, aggregate, combine))
   }
 
   /** Same semantics over an already-loaded DataFrame (e.g. a registered
@@ -112,18 +112,19 @@ object GroupByEngine {
     * directory instead of one exists() RPC per file. At reference scale the
     * "catalog" is just the file list (files_map, parqueryd/controller.py:107);
     * at 100 TB the listing is the only driver-side O(files) step, so keep it
-    * to bulk LIST calls. */
-  private[graft] def pruneMissing(spark: SparkSession, filenames: Seq[String]): Seq[String] = {
+    * to bulk LIST calls. Returns the listed statuses in caller order, so the
+    * schema resolution reuses them instead of stat'ing each file again. */
+  private[graft] def pruneMissing(spark: SparkSession, filenames: Seq[String]): Seq[FileStatus] = {
     if (filenames.isEmpty) return Nil
     val conf = spark.sparkContext.hadoopConfiguration
     val byDir = filenames.distinct.groupBy(f => new Path(f).getParent)
     val present = byDir.iterator.flatMap { case (dir, files) =>
       val fs = dir.getFileSystem(conf)
-      val listed: Set[String] =
-        try fs.listStatus(dir).iterator.map(_.getPath.getName).toSet
-        catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-      files.filter(f => listed.contains(new Path(f).getName))
-    }.toSet
-    filenames.filter(present.contains) // preserve caller order
+      val listed: Map[String, FileStatus] =
+        try fs.listStatus(dir).iterator.map(s => s.getPath.getName -> s).toMap
+        catch { case _: java.io.FileNotFoundException => Map.empty[String, FileStatus] }
+      files.flatMap(f => listed.get(new Path(f).getName).map(f -> _))
+    }.toMap
+    filenames.flatMap(present.get) // preserve caller order
   }
 }

@@ -224,11 +224,13 @@ object Ingest {
       .map { s => fs.delete(s.getPath, true); s.getPath.toString }
   }
 
-  /** Read the currently-published version (resolve manifest, then scan). */
+  /** Read the currently-published version: resolve the manifest, then scan
+    * with the schema taken from the version's footers on the driver
+    * ([[SchemaDrift.readSharded]]), so building the read starts no job. */
   def readPublished(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(new Path(tableDir, ManifestName))
     val dataDir = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    spark.read.parquet(dataDir)
+    SchemaDrift.readSharded(spark, Seq(dataDir))
   }
 }

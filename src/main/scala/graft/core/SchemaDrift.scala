@@ -1,7 +1,11 @@
 package graft.core
 
-import org.apache.spark.SparkException
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 
 /** Schema-on-read over independently written shard files — the reference's
@@ -9,17 +13,17 @@ import org.apache.spark.sql.types._
   * drift over time (a column added by a new producer, an int widened to
   * long) and a query over the union must still answer.
   *
-  * Strategy, in cost order:
-  *  1. `mergeSchema=true` read — Spark merges footers DISTRIBUTED (one task
-  *     wave), handles added/missing columns. This is the common case and
-  *     costs only the footer pass.
-  *  2. If merge throws `CANNOT_MERGE_SCHEMAS` (type drift: int32 vs int64),
-  *     sweep per-path footer schemas on a bounded driver pool, widen them
-  *     through the numeric lattice below, and re-read with one EXPLICIT
-  *     widened schema — Spark 4's Parquet reader upcasts per file
-  *     (int→long, int/long/float→double) and fills absent columns with
-  *     null, so the result is STILL a single FileSourceScan: no per-shard
-  *     DataFrame unions, no N-way plan blowup at 100k shards.
+  * The schema is resolved on the driver without a Spark job: a file stands
+  * for itself, a directory for its data files (`_`/`.` names skipped, as in
+  * Spark's listing). Each file's footer alone is read on ≤32 daemon threads
+  * and converted by Spark's own footer reader (its row metadata keeps
+  * timestamp and decimal types exact); the schemas fold through the lattice
+  * below into ONE explicit read schema, which Spark 4's Parquet reader
+  * upcasts to per file (absent columns read null): a single FileSourceScan,
+  * no per-shard unions at 100k shards. The sweep's deadline
+  * (`graft.drift.footerSweepTimeoutSec`, default 1 s per file, 10 min floor,
+  * so an honest 100k-file sweep fits) turns a read hung on degraded storage
+  * into an error instead of a wedged driver.
   *
   * Widening lattice (both engines' SQL semantics agree with it):
   * byte < short < int < long; float < double; any integral ⊔ any
@@ -32,48 +36,43 @@ object SchemaDrift {
 
   final class SchemaDriftException(msg: String) extends IllegalArgumentException(msg)
 
-  /** Read a drifting shard set as one DataFrame (single scan either path). */
+  /** Read a drifting shard set (files or directories) as one DataFrame. */
   def readSharded(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "readSharded needs at least one path")
-    try spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    catch {
-      case e: SparkException if e.getMessage.contains("CANNOT_MERGE_SCHEMAS") =>
-        spark.read.schema(widenedSchema(spark, paths)).parquet(paths: _*)
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    readListed(spark, paths.map(p => new Path(p)).map(p => p.getFileSystem(conf).getFileStatus(p)))
   }
 
-  /** Per-path footer schemas, swept on a bounded pool (footer-only reads;
-    * this is the rare fallback path, and still O(paths) driver work — the
-    * happy path merges footers in executors). */
-  private def widenedSchema(spark: SparkSession, paths: Seq[String]): StructType = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
+  /** [[readSharded]] over roots the caller already listed (GroupByEngine.pruneMissing). */
+  private[graft] def readListed(spark: SparkSession, roots: Seq[FileStatus]): DataFrame = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    // daemon pool + finite deadline: this fallback fires exactly when
-    // storage is degraded, so one hung footer read must surface as an
-    // error (and never pin the JVM via non-daemon threads), not wedge the
-    // driver forever
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, paths.size),
+    val conf = spark.sparkContext.hadoopConfiguration
+    def dataFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter { c =>
+        val n = c.getPath.getName
+        !n.startsWith(".") && (!n.startsWith("_") || n.contains("=")) // `_c=1` partition dirs stay
+      }.flatMap(dataFiles(fs, _))
+    val files = roots.flatMap(r => dataFiles(r.getPath.getFileSystem(conf), r)).distinctBy(_.getPath)
+    if (files.isEmpty)
+      throw new SchemaDriftException(s"no Parquet data files under ${roots.map(_.getPath).mkString(", ")}")
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val deadline = spark.conf.getOption("graft.drift.footerSweepTimeoutSec")
+      .map(_.toLong).getOrElse(math.max(600L, files.size.toLong)).seconds
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(32, files.size),
       (r: Runnable) => { val t = new Thread(r, "graft-drift-footer"); t.setDaemon(true); t })
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // deadline SCALES with the sweep size (≥1 s per path, 10 min floor) and
-    // is conf-overridable: a flat cap would reject an honest 100k-shard
-    // sweep — the exact scenario this fallback exists for — while a hung
-    // footer read must still surface as an error, not wedge the driver
-    val deadline = spark.conf.getOption("graft.drift.footerSweepTimeoutSec")
-      .map(_.toLong).getOrElse(math.max(600L, paths.size.toLong)).seconds
-    try {
-      val schemas = Await.result(
-        Future.sequence(paths.map(p => Future(spark.read.parquet(p).schema))),
-        deadline)
-      schemas.reduce(widen)
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new SchemaDriftException(
-          s"schema-drift footer sweep over ${paths.size} paths exceeded $deadline " +
-            "(degraded storage?) — retry, raise graft.drift.footerSweepTimeoutSec, " +
-            "or pass an explicit schema")
-    } finally pool.shutdown()
+    val schemas = try Await.result(Future.traverse(files) { f =>
+      Future(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)), converter))
+    }, deadline) catch {
+      case _: java.util.concurrent.TimeoutException => throw new SchemaDriftException(
+        s"schema-drift footer sweep over ${files.size} files exceeded $deadline " +
+          "(degraded storage?) — retry, raise graft.drift.footerSweepTimeoutSec, " +
+          "or pass an explicit schema")
+    } finally pool.shutdownNow()
+    spark.read.schema(schemas.reduce(widen)).parquet(roots.map(_.getPath.toString): _*)
   }
 
   /** Union of fields (first-seen order), types widened; all nullable —
@@ -82,7 +81,7 @@ object SchemaDrift {
     val bByName = b.fields.map(f => f.name -> f).toMap
     val merged = a.fields.map { fa =>
       bByName.get(fa.name) match {
-        case Some(fb) => StructField(fa.name, widenType(fa.name, fa.dataType, fb.dataType))
+        case Some(fb) => fa.copy(dataType = widenType(fa.name, fa.dataType, fb.dataType), nullable = true)
         case None     => fa.copy(nullable = true)
       }
     }

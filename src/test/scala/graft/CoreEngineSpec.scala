@@ -199,4 +199,69 @@ class CoreEngineSpec extends AnyFunSuite {
     assert(got.toSeq === Seq("2024-03-05T00:00", "2024-03-06T00:00",
       "2024-03-07T10:30"))
   }
+
+  /** Spark jobs started by `body` on this thread, counted after the
+    * listener bus drained. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("graft.test.tag") == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+
+  test("schema resolution starts no Spark job: groupby over shard files, " +
+    "an int/long-drifted shard set, and readPublished") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift-nojob").toString
+    Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/s1")
+    Seq((3, "a")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/s2")
+    Seq((10L, "c", 1.5)).toDF("k", "v", "extra").coalesce(1).write.parquet(s"$dir/s3")
+    val call = (files: Seq[String]) => GraftService.GroupByCall(files, Seq("v"),
+      Seq(AggSpec("k", "sum", "sum_k")))
+    val same = partFiles(s"$dir/s1") ++ partFiles(s"$dir/s2")
+    val (df1, j1) = jobsDuring(GraftService.groupby(spark, call(same)).get)
+    assert(j1 === 0, s"groupby over ${same.size} shard files started $j1 jobs while building")
+    val drifted = partFiles(s"$dir/s1") ++ partFiles(s"$dir/s3")
+    val (df2, j2) = jobsDuring(GraftService.groupby(spark, call(drifted)).get)
+    assert(j2 === 0, s"groupby over an int/long-drifted shard set started $j2 jobs")
+    val (df3, j3) = jobsDuring(SchemaDrift.readSharded(spark, Seq(s"$dir/s1", s"$dir/s3")))
+    assert(j3 === 0 && df3.schema("k").dataType === org.apache.spark.sql.types.LongType)
+    val table = s"$dir/t"
+    Ingest.atomicPublish(Seq((1L, "x"), (2L, "y")).toDF("id", "s").repartition(2), table)
+    val (pub, j4) = jobsDuring(Ingest.readPublished(spark, table))
+    assert(j4 === 0, s"readPublished started $j4 jobs while building")
+    // the counter is live: running a built plan does show up
+    val (got, ran) = jobsDuring(df1.orderBy("v").collect())
+    assert(ran > 0)
+    assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("a", 4L), ("b", 2L)))
+    assert(df2.orderBy("v").collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
+      Seq(("a", 1L), ("b", 2L), ("c", 10L)))
+    assert(pub.orderBy("id").collect().map(_.getString(1)).toSeq === Seq("x", "y"))
+  }
+
+  test("schema drift: a path with no data files raises an error naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift-empty").toString
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
+    val e = intercept[SchemaDrift.SchemaDriftException] {
+      SchemaDrift.readSharded(spark, Seq(dir))
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("no Parquet data files"))
+  }
 }
